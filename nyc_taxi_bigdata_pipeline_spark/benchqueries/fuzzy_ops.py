@@ -6,11 +6,13 @@ oracle-pinned against a DuckDB brute-force scan.
 The oracle IS the quadratic form (length band + exact levenshtein over
 the c_custkey < c_custkey cross) — hash equality proves the segment
 blocking lossless end-to-end on a corpus that is deliberately
-adversarial for it: every ``Customer#`` name shares a constant 9-char
-prefix, so the prefix segment matches everything and candidates
-degenerate toward the length band (see the saturation note in the
-operator docstring; `scripts/bench_r6_editdist.py` measures the
-selective-corpus regime where blocking pays).
+adversarial for it: every ``Customer#`` name shares a constant prefix,
+which would make the prefix segment match everything. The operator has
+one blocking scheme (k+1 PassJoin pieces) and always strips the
+corpus-wide common prefix/suffix first, which removes that constant
+material exactly (see the saturation note in the operator docstring;
+`scripts/bench_r6_editdist.py` measures candidate volume per corpus
+regime).
 """
 
 from __future__ import annotations

@@ -12,7 +12,12 @@ variants built for 100 TB:
   O(n²) — then exact Jaccard verification on candidates only
 - SimHash: 64-bit fingerprint + Hamming ≤ k candidate filter
 
-All JVM expressions, no Python UDFs in the hot path.
+Signatures, banding and candidate generation are JVM expressions
+(whole-stage codegen). The exact shingle-overlap verify on candidate
+pairs is the one Python stage: a single Arrow (mapInPandas) kernel that
+intersects presorted per-doc shingle-hash arrays
+(:func:`_pair_overlap_verify`, shared by the Jaccard and containment
+verifies).
 """
 
 from __future__ import annotations
@@ -384,7 +389,6 @@ def jaccard_verify(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    materialize_shingles: bool = False,
     shingle_n: int = 5,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
@@ -396,15 +400,9 @@ def jaccard_verify(
     to the minhash banding error). Pairs sharing zero shingles drop out
     of the inner join — correct for any threshold > 0.
 
-    ``materialize_shingles``: the shingle frame is referenced three
-    times under DIFFERENT join keys (per-doc sizes, id_a side,
-    (id_b, hash) side), so exchange reuse cannot dedup them and the
-    explode+hash runs three times. The flag eagerly localCheckpoints
-    the candidate-doc shingles once — results identical; turn it on
-    when candidates × shingles is the dominant cost (the 1000×-tier
-    probe's long pole). Default off so registry/bench query BUILDERS
-    stay side-effect-free (eager work belongs inside the timed
-    action, not query construction)."""
+    The test reference for :func:`jaccard_verify_arrow` (the scale
+    path, 4-5× faster at the 100× tier: 13.8 vs 69.5 s); no production
+    caller."""
     # pairs fans into ids (×2) + the inter join — same recompute class
     # as the Arrow twin; lazy in-operator checkpoint (honest)
     pairs = pairs.localCheckpoint(eager=False)
@@ -417,8 +415,6 @@ def jaccard_verify(
         docs.join(ids, id_col, "left_semi"), id_col, text_col,
         n=shingle_n, hash_family=hash_family,
     )
-    if materialize_shingles:
-        sh = sh.localCheckpoint(eager=True)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
     a = sh.select(F.col(id_col).alias("id_a"), "__h")
     b = sh.select(F.col(id_col).alias("id_b"), "__h")
@@ -449,19 +445,26 @@ def jaccard_verify(
 # pairs/doc). 256 MB is far inside the 32 GB local driver heap and any
 # prod executor's broadcast budget; past the cap the operator falls
 # back to the join shape with identical results (the graph.py
-# broadcast_nodes_max discipline — fallback is test-pinned via cap=0).
+# broadcast_nodes_max discipline). Read at call time, so tests pin the
+# fallback by monkeypatching this constant to 0.
 BROADCAST_ARRAYS_MAX_BYTES = 256 << 20
 
 
-def _arrays_map_or_none(arrays: DataFrame, id_col: str, cap_bytes: int):
+def _check_threshold(threshold: float) -> None:
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+
+
+def _arrays_map_or_none(arrays: DataFrame, id_col: str):
     """Collect ``(id, sorted hash array)`` into a driver dict when the
-    total element payload fits ``cap_bytes``; None → caller uses the
-    join shape. One SUM(size) job decides (it also materializes the
-    arrays checkpoint, which the fallback's joins then reuse)."""
-    if cap_bytes <= 0:
+    total element payload fits :data:`BROADCAST_ARRAYS_MAX_BYTES`; None
+    → caller uses the join shape. One SUM(size) job decides (it also
+    materializes the arrays checkpoint, which the fallback's joins then
+    reuse)."""
+    if BROADCAST_ARRAYS_MAX_BYTES <= 0:
         return None
     total = arrays.agg(F.sum(F.size("__sh"))).first()[0]
-    if total is None or total * 8 > cap_bytes:
+    if total is None or total * 8 > BROADCAST_ARRAYS_MAX_BYTES:
         return None
     import numpy as np
 
@@ -470,31 +473,35 @@ def _arrays_map_or_none(arrays: DataFrame, id_col: str, cap_bytes: int):
     }
 
 
-def jaccard_verify_arrow(
+def _pair_overlap_verify(
     pairs: DataFrame,
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    shingle_n: int = 5,
-    hash_family: str = "xxhash64",
-    shingles: DataFrame | None = None,
-    broadcast_arrays_max_bytes: int = BROADCAST_ARRAYS_MAX_BYTES,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    shingle_n: int,
+    hash_family: str,
+    shingles: DataFrame | None,
+    cols: tuple[str, str, str],
+    score,
 ) -> DataFrame:
-    """Exact shingle-Jaccard on candidates via an Arrow kernel — the
-    scale path twin of :func:`jaccard_verify` (same shingle hashes,
-    same output set; equivalence pinned by test).
+    """Exact shingle-overlap verify on candidate pairs — the one Arrow
+    kernel behind :func:`jaccard_verify_arrow` and
+    :func:`containment_verify_arrow`. ``cols`` names the two pair id
+    columns and the output score column; ``score(inter, |a|, |b|)``
+    turns the intersection size into the metric, and pairs scoring
+    ``>= threshold`` are kept.
 
     Shape: each candidate doc's distinct shingle hashes are collected
     ONCE into a sorted array (one aggregate over the explode — vs the
     relational form's three differently-keyed joins over the exploded
-    rows), the pair table equi-joins the two arrays in, and a
-    mapInPandas kernel intersects the sorted arrays per pair
-    (np.intersect1d on presorted uniques). Per-pair work is
-    O(|A|+|B|); the shuffle carries each doc's array once per side it
-    appears on. At the 1000x tier (726k pairs, ~60 shingles/doc) the
-    kernel itself is seconds — the join is the cost, and it is 2 joins
-    instead of 3 with no exploded-row fan-out.
+    rows), and a mapInPandas kernel intersects the two sorted arrays per
+    pair (np.intersect1d on presorted uniques, O(|A|+|B|)). Under
+    :data:`BROADCAST_ARRAYS_MAX_BYTES` the array dictionary is broadcast
+    and the kernel reads pair IDS only; past it, the pair table
+    equi-joins both arrays in (the driver-OOM-safe join shape). A doc
+    with no array drops its pairs on both shapes — the dictionary miss
+    mirrors the inner join.
 
     ``shingles``: caller-precomputed distinct hashed-shingle frame
     ``(id_col, __h)`` with the SAME n / hash_family (the
@@ -509,19 +516,22 @@ def jaccard_verify_arrow(
     import numpy as np
     import pandas as pd
 
+    _check_threshold(threshold)
+    a_col, b_col, score_col = cols
     # ``pairs`` is referenced THREE times below (both arms of the ids
-    # union + the join input) and ``arrays`` TWICE under different join
-    # keys (id_a / id_b) — exchange reuse cannot dedup differently-keyed
-    # consumers, and statically-planned broadcasts leave no shuffle
-    # boundary to reuse at all (CLAUDE.md recompute class; the r12 probe
-    # measured the candidate chain re-running once per reference: 125
-    # parquet scans / 0 ReusedExchange in dedup_minhash_pipeline's
-    # plan). Lazy localCheckpoints inside the operator are honest — the
-    # first caller action materializes them inside its own timing.
+    # union + the kernel input) and ``arrays`` TWICE under different join
+    # keys in the join shape — exchange reuse cannot dedup
+    # differently-keyed consumers, and statically-planned broadcasts
+    # leave no shuffle boundary to reuse at all (CLAUDE.md recompute
+    # class; the r12 probe measured the candidate chain re-running once
+    # per reference: 125 parquet scans / 0 ReusedExchange in
+    # dedup_minhash_pipeline's plan). Lazy localCheckpoints inside the
+    # operator are honest — the first caller action materializes them
+    # inside its own timing.
     pairs = pairs.localCheckpoint(eager=False)
     ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .union(pairs.select(F.col("id_b").alias(id_col)))
+        pairs.select(F.col(a_col).alias(id_col))
+        .union(pairs.select(F.col(b_col).alias(id_col)))
         .distinct()
     )
     if shingles is None:
@@ -536,64 +546,70 @@ def jaccard_verify_arrow(
     ).localCheckpoint(eager=False)
 
     pair_types = dict(pairs.dtypes)
-    id_a_t, id_b_t = pair_types["id_a"], pair_types["id_b"]
-    out_schema = f"id_a {id_a_t}, id_b {id_b_t}, jaccard double"
-
-    amap = _arrays_map_or_none(arrays, id_col, broadcast_arrays_max_bytes)
-    if amap is not None:
-        bc = pairs.sparkSession.sparkContext.broadcast(amap)
-
-        def bkernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            m = bc.value  # once per task (guide §4.5)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ida, idb = pdf["id_a"].tolist(), pdf["id_b"].tolist()
-                keep_a, keep_b, jac_l = [], [], []
-                for i in range(len(pdf)):
-                    a = m.get(ida[i])
-                    b = m.get(idb[i])
-                    if a is None or b is None:  # ≡ the inner-join drop
-                        continue
-                    inter = np.intersect1d(a, b, assume_unique=True).size
-                    j = inter / (len(a) + len(b) - inter)
-                    if j >= threshold:
-                        keep_a.append(ida[i])
-                        keep_b.append(idb[i])
-                        jac_l.append(j)
-                yield pd.DataFrame(
-                    {"id_a": keep_a, "id_b": keep_b, "jaccard": jac_l}
-                )
-
-        return pairs.select("id_a", "id_b").mapInPandas(bkernel, out_schema)
-
-    cand = (
-        pairs.join(
-            arrays.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sa")),
-            "id_a",
-        )
-        .join(
-            arrays.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sb")),
-            "id_b",
-        )
+    out_schema = (
+        f"{a_col} {pair_types[a_col]}, {b_col} {pair_types[b_col]}, "
+        f"{score_col} double"
     )
 
+    amap = _arrays_map_or_none(arrays, id_col)
+    if amap is not None:
+        bc = pairs.sparkSession.sparkContext.broadcast(amap)
+        cand = pairs.select(a_col, b_col)
+    else:
+        bc = None
+        cand = pairs.join(
+            arrays.select(F.col(id_col).alias(a_col), F.col("__sh").alias("__sa")),
+            a_col,
+        ).join(
+            arrays.select(F.col(id_col).alias(b_col), F.col("__sh").alias("__sb")),
+            b_col,
+        )
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        m = bc.value if bc is not None else None  # once per task (guide §4.5)
         for pdf in batches:
             if not len(pdf):
                 continue
-            jac = np.empty(len(pdf), dtype=np.float64)
-            sa_l, sb_l = pdf["__sa"].tolist(), pdf["__sb"].tolist()
-            for i in range(len(pdf)):
-                a, b = sa_l[i], sb_l[i]
-                inter = np.intersect1d(a, b, assume_unique=True).size
-                jac[i] = inter / (len(a) + len(b) - inter)
-            out = pd.DataFrame(
-                {"id_a": pdf["id_a"], "id_b": pdf["id_b"], "jaccard": jac}
-            )
-            yield out[out["jaccard"] >= threshold]
+            ka, kb = pdf[a_col].tolist(), pdf[b_col].tolist()
+            if m is None:
+                sa, sb = pdf["__sa"].tolist(), pdf["__sb"].tolist()
+            else:
+                sa, sb = [m.get(x) for x in ka], [m.get(x) for x in kb]
+            keep_a, keep_b, scores = [], [], []
+            for x, y, arr_a, arr_b in zip(ka, kb, sa, sb):
+                if arr_a is None or arr_b is None:  # ≡ the inner-join drop
+                    continue
+                inter = np.intersect1d(arr_a, arr_b, assume_unique=True).size
+                v = score(inter, len(arr_a), len(arr_b))
+                if v >= threshold:
+                    keep_a.append(x)
+                    keep_b.append(y)
+                    scores.append(v)
+            yield pd.DataFrame({a_col: keep_a, b_col: keep_b, score_col: scores})
 
     return cand.mapInPandas(kernel, out_schema)
+
+
+def jaccard_verify_arrow(
+    pairs: DataFrame,
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    threshold: float = 0.8,
+    shingle_n: int = 5,
+    hash_family: str = "xxhash64",
+    shingles: DataFrame | None = None,
+) -> DataFrame:
+    """Exact shingle-Jaccard ``|A∩B| / |A∪B|`` on candidate pairs
+    ``(id_a, id_b)`` → ``(id_a, id_b, jaccard)`` — the scale-path twin
+    of :func:`jaccard_verify` (same shingle hashes, same output set;
+    equivalence pinned by test). Shape, byte cap and ``shingles`` as in
+    :func:`_pair_overlap_verify`."""
+    return _pair_overlap_verify(
+        pairs, docs, id_col, text_col, threshold, shingle_n, hash_family,
+        shingles, ("id_a", "id_b", "jaccard"),
+        lambda inter, na, nb: inter / (na + nb - inter),
+    )
 
 
 def jaccard_join_prefix(
@@ -602,7 +618,6 @@ def jaccard_join_prefix(
     text_col: str = "text",
     threshold: float = 0.8,
     shingle_n: int = 5,
-    broadcast_arrays_max_bytes: int = BROADCAST_ARRAYS_MAX_BYTES,
 ) -> DataFrame:
     """EXACT set-similarity self-join at a Jaccard threshold via prefix
     filtering (SSJoin/All-Pairs class — Chaudhuri et al. ICDE'06,
@@ -679,8 +694,7 @@ def jaccard_join_prefix(
         docs, id_col, text_col, threshold, shingle_n, shingles=sh
     )
     return jaccard_verify_arrow(
-        cand, docs, id_col, text_col, threshold, shingle_n=shingle_n, shingles=sh,
-        broadcast_arrays_max_bytes=broadcast_arrays_max_bytes,
+        cand, docs, id_col, text_col, threshold, shingle_n=shingle_n, shingles=sh
     )
 
 
@@ -702,7 +716,7 @@ def prefix_filter_candidates(
     """
     from pyspark.sql import Window
 
-    assert 0.0 < threshold <= 1.0
+    _check_threshold(threshold)
     sh = (
         shingles
         if shingles is not None
@@ -778,7 +792,6 @@ def containment_join_prefix(
     text_col: str = "text",
     threshold: float = 0.8,
     shingle_n: int = 5,
-    broadcast_arrays_max_bytes: int = BROADCAST_ARRAYS_MAX_BYTES,
 ) -> DataFrame:
     """EXACT directed set-CONTAINMENT self-join: all ordered pairs
     (src, dst), src ≠ dst, with |S_src ∩ S_dst| / |S_src| ≥ threshold
@@ -817,7 +830,7 @@ def containment_join_prefix(
     """
     from pyspark.sql import Window
 
-    assert 0.0 < threshold <= 1.0
+    _check_threshold(threshold)
     sh = hashed_shingles(docs, id_col, text_col, n=shingle_n).localCheckpoint(
         eager=False
     )
@@ -880,8 +893,7 @@ def containment_join_prefix(
     # through so the verify's array build reads the checkpoint instead
     # of re-running the corpus explode+hash+distinct pass (r12)
     return containment_verify_arrow(
-        cand, docs, id_col, text_col, threshold, shingle_n=shingle_n,
-        shingles=sh, broadcast_arrays_max_bytes=broadcast_arrays_max_bytes,
+        cand, docs, id_col, text_col, threshold, shingle_n=shingle_n, shingles=sh
     )
 
 
@@ -893,101 +905,16 @@ def containment_verify_arrow(
     threshold: float = 0.8,
     shingle_n: int = 5,
     shingles: DataFrame | None = None,
-    broadcast_arrays_max_bytes: int = BROADCAST_ARRAYS_MAX_BYTES,
 ) -> DataFrame:
-    """Exact directed shingle-containment on candidate pairs — the
-    :func:`jaccard_verify_arrow` shape with the source-normalized
-    metric: |S_src ∩ S_dst| / |S_src| per (src_id, dst_id). Each
-    candidate doc's distinct shingle hashes are collected once into a
-    sorted array; a mapInPandas kernel intersects per pair
-    (np.intersect1d on presorted uniques, O(|A|+|B|)). ``shingles`` as
-    in :func:`jaccard_verify_arrow` (precomputed (id, __h) frame —
-    skips the re-shingle pass). Under ``broadcast_arrays_max_bytes``
-    the array dictionary is broadcast and the kernel reads pair IDS
-    only (see the cap constant's comment); past it, the join shape."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    # same recompute class as jaccard_verify_arrow: pairs ×3, arrays ×2
-    # under different keys — lazy in-operator checkpoints (honest)
-    pairs = pairs.localCheckpoint(eager=False)
-    ids = (
-        pairs.select(F.col("src_id").alias(id_col))
-        .union(pairs.select(F.col("dst_id").alias(id_col)))
-        .distinct()
+    """Exact directed shingle-containment ``|S_src ∩ S_dst| / |S_src|``
+    on candidate pairs ``(src_id, dst_id)`` →
+    ``(src_id, dst_id, containment)``. Shape, byte cap and ``shingles``
+    as in :func:`_pair_overlap_verify`."""
+    return _pair_overlap_verify(
+        pairs, docs, id_col, text_col, threshold, shingle_n, "xxhash64",
+        shingles, ("src_id", "dst_id", "containment"),
+        lambda inter, ns, nd: inter / ns,
     )
-    if shingles is None:
-        sh = hashed_shingles(
-            docs.join(ids, id_col, "left_semi"), id_col, text_col, n=shingle_n
-        )
-    else:
-        sh = shingles.join(ids, id_col, "left_semi")
-    arrays = sh.groupBy(id_col).agg(
-        F.sort_array(F.collect_set("__h")).alias("__sh")
-    ).localCheckpoint(eager=False)
-
-    pair_types = dict(pairs.dtypes)
-    src_t, dst_t = pair_types["src_id"], pair_types["dst_id"]
-    out_schema = f"src_id {src_t}, dst_id {dst_t}, containment double"
-
-    amap = _arrays_map_or_none(arrays, id_col, broadcast_arrays_max_bytes)
-    if amap is not None:
-        bc = pairs.sparkSession.sparkContext.broadcast(amap)
-
-        def bkernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            m = bc.value  # once per task (guide §4.5)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids, idd = pdf["src_id"].tolist(), pdf["dst_id"].tolist()
-                keep_s, keep_d, con_l = [], [], []
-                for i in range(len(pdf)):
-                    s = m.get(ids[i])
-                    d = m.get(idd[i])
-                    if s is None or d is None:  # ≡ the inner-join drop
-                        continue
-                    inter = np.intersect1d(s, d, assume_unique=True).size
-                    c = inter / len(s)
-                    if c >= threshold:
-                        keep_s.append(ids[i])
-                        keep_d.append(idd[i])
-                        con_l.append(c)
-                yield pd.DataFrame(
-                    {"src_id": keep_s, "dst_id": keep_d, "containment": con_l}
-                )
-
-        return pairs.select("src_id", "dst_id").mapInPandas(bkernel, out_schema)
-
-    cand = pairs.join(
-        arrays.select(F.col(id_col).alias("src_id"), F.col("__sh").alias("__ss")),
-        "src_id",
-    ).join(
-        arrays.select(F.col(id_col).alias("dst_id"), F.col("__sh").alias("__sd")),
-        "dst_id",
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            con = np.empty(len(pdf), dtype=np.float64)
-            ss_l, sd_l = pdf["__ss"].tolist(), pdf["__sd"].tolist()
-            for i in range(len(pdf)):
-                s, d = ss_l[i], sd_l[i]
-                inter = np.intersect1d(s, d, assume_unique=True).size
-                con[i] = inter / len(s)
-            out = pd.DataFrame(
-                {
-                    "src_id": pdf["src_id"],
-                    "dst_id": pdf["dst_id"],
-                    "containment": con,
-                }
-            )
-            yield out[out["containment"] >= threshold]
-
-    return cand.mapInPandas(kernel, out_schema)
 
 
 def minhash_dedup(
@@ -999,8 +926,6 @@ def minhash_dedup(
     threshold: float = 0.8,
     bucket_cap: int = 256,
     estimate_prefilter: bool = False,
-    materialize_shingles: bool = True,
-    kernel: str = "arrow",
     sigs: DataFrame | None = None,
     hash_family: str = "xxhash64",
     shingles: DataFrame | None = None,
@@ -1012,21 +937,8 @@ def minhash_dedup(
     ``estimate_prefilter`` inserts :func:`minhash_estimate_filter`
     (cut at threshold − 3.5σ of the 32-hash estimator) — the scale path
     for corpora whose band collisions outnumber true near-dups; exact
-    verification still decides every returned pair.
-
-    ``kernel`` picks the verify implementation: ``"arrow"`` (default)
-    collects each candidate doc's sorted shingle array once and
-    intersects per pair in a vectorized Pandas kernel — measured 4-5×
-    the relational form at the 100× tier (13.8 vs 69.5 s), identical
-    output (equivalence-pinned); ``"relational"`` keeps the all-codegen
-    3-join form for environments where Arrow workers are unwelcome.
-
-    ``materialize_shingles`` (relational kernel only) defaults ON here
-    (unlike bare :func:`jaccard_verify`): the verify stage re-derives the candidate
-    docs' shingles under three different join keys, and the eager
-    checkpoint that deduplicates that work (measured 2.2× at the
-    100×-tier) lands inside the OPERATOR — callers time the whole
-    chain, so there's no builder-side-effect honesty concern.
+    verification still decides every returned pair. The verify is
+    :func:`jaccard_verify_arrow`.
 
     ``sigs``: caller-precomputed minhash signatures (same ``num_hashes``
     and shingle scheme as :func:`add_minhash`) — avoids re-shingling
@@ -1061,12 +973,8 @@ def minhash_dedup(
             pairs, sigs, id_col, num_hashes,
             min_estimate=max(threshold - 3.5 * sigma, 0.0),
         )
-    if kernel == "arrow":
-        return jaccard_verify_arrow(pairs, docs, id_col, text_col, threshold,
-                                    hash_family=hash_family, shingles=shingles)
-    return jaccard_verify(pairs, docs, id_col, text_col, threshold,
-                          materialize_shingles=materialize_shingles,
-                          hash_family=hash_family)
+    return jaccard_verify_arrow(pairs, docs, id_col, text_col, threshold,
+                                hash_family=hash_family, shingles=shingles)
 
 
 # ------------------------------------------------- near-dup clustering

@@ -112,9 +112,7 @@ def probe_tier(spark, docs_path: str, reps: int) -> None:
 
     dt, verified = timed(
         "jaccard",
-        lambda: dedup.jaccard_verify(
-            kept_pairs, docs, materialize_shingles=True
-        ).localCheckpoint(eager=True),
+        lambda: dedup.jaccard_verify(kept_pairs, docs).localCheckpoint(eager=True),
     )
     n_ver = verified.count()
     print(f"reps={reps} jaccard_verify: {dt:.1f} s  {max(n_kept,1)/dt:,.0f} pairs/s  ({n_ver} near-dups)")

@@ -1616,65 +1616,72 @@ def test_jaccard_verify_arrow_matches_relational(spark, sf_dir):
     pairs = pairs.localCheckpoint(eager=True)
     rel = {
         (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in dedup.jaccard_verify(
-            pairs, corpus, threshold=0.5, materialize_shingles=True
-        ).collect()
+        for r in dedup.jaccard_verify(pairs, corpus, threshold=0.5).collect()
     }
     arw = {
         (r["id_a"], r["id_b"], round(r["jaccard"], 9))
         for r in dedup.jaccard_verify_arrow(pairs, corpus, threshold=0.5).collect()
     }
     assert rel == arw and len(rel) > 100
-    # broadcast_arrays_max_bytes=0 forces the join-shape fallback (the
-    # over-cap path a corpus-scale candidate set takes) — must be
-    # bit-identical to the broadcast-dictionary path used above
-    fb = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in dedup.jaccard_verify_arrow(
-            pairs, corpus, threshold=0.5, broadcast_arrays_max_bytes=0
-        ).collect()
-    }
-    assert fb == arw
 
 
-def test_containment_verify_broadcast_matches_join_fallback(spark):
-    """containment_verify_arrow's broadcast-dictionary path (arrays
-    collected once, kernel reads pair ids only) must equal the join
-    shape it replaces under the byte cap, containment values included."""
+@pytest.mark.parametrize("metric", ["jaccard", "containment"])
+def test_verify_broadcast_matches_join_fallback(spark, monkeypatch, metric):
+    """The shared pair-overlap verify's broadcast-dictionary shape
+    (arrays collected once, kernel reads pair ids only) must equal the
+    join shape it falls back to past BROADCAST_ARRAYS_MAX_BYTES, scores
+    included. One candidate pair names a doc absent from the corpus, so
+    it has no shingle array: the dictionary miss must drop it exactly
+    like the join shape's inner join does."""
+    verify, join_prefix, a_col, b_col = {
+        "jaccard": (dedup.jaccard_verify_arrow, dedup.jaccard_join_prefix,
+                    "id_a", "id_b"),
+        "containment": (dedup.containment_verify_arrow,
+                        dedup.containment_join_prefix, "src_id", "dst_id"),
+    }[metric]
     long_text = " ".join(f"tok{i:03d}" for i in range(80))
     short_text = " ".join(f"tok{i:03d}" for i in range(20))
     mid_text = " ".join(f"tok{i:03d}" for i in range(10, 55))
     df = spark.createDataFrame(
-        [(1, short_text), (2, long_text), (3, mid_text)],
+        [(1, short_text), (2, long_text), (3, mid_text), (4, mid_text)],
         "doc_id long, text string",
     )
-    bcast = {
-        (r.src_id, r.dst_id, round(r.containment, 9))
-        for r in dedup.containment_join_prefix(
-            df, threshold=0.4, shingle_n=14
-        ).collect()
-    }
-    pairs_all = spark.createDataFrame(
-        [(a, b) for a in (1, 2, 3) for b in (1, 2, 3) if a != b],
-        "src_id long, dst_id long",
+    missing = 99  # no such doc → no shingle array
+    ids = (1, 2, 3, 4, missing)
+    pairs = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids
+         if (a < b if metric == "jaccard" else a != b)],
+        f"{a_col} long, {b_col} long",
     )
-    join_shape = {
-        (r.src_id, r.dst_id, round(r.containment, 9))
-        for r in dedup.containment_verify_arrow(
-            pairs_all, df, threshold=0.4, shingle_n=14,
-            broadcast_arrays_max_bytes=0,
-        ).collect()
-    }
-    bcast_all = {
-        (r.src_id, r.dst_id, round(r.containment, 9))
-        for r in dedup.containment_verify_arrow(
-            pairs_all, df, threshold=0.4, shingle_n=14
-        ).collect()
-    }
-    assert bcast_all == join_shape and len(join_shape) >= 2
+
+    def run(frame):
+        return {tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+                for r in frame.collect()}
+
+    chain = run(join_prefix(df, threshold=0.4, shingle_n=14))
+    bcast = run(verify(pairs, df, threshold=0.4, shingle_n=14))
+    monkeypatch.setattr(dedup, "BROADCAST_ARRAYS_MAX_BYTES", 0)
+    join_shape = run(verify(pairs, df, threshold=0.4, shingle_n=14))
+    assert bcast == join_shape and len(join_shape) >= 2
+    assert all(missing not in r[:2] for r in join_shape)
     # the prefix-filter chain's confirmed set is a subset decided by the
     # same verify — consistent across paths
-    assert bcast <= bcast_all
+    assert chain <= bcast
+
+
+@pytest.mark.parametrize("threshold", [0.0, 1.5])
+def test_ssjoin_threshold_out_of_range_raises(spark, threshold):
+    """Thresholds outside (0, 1] are rejected with ValueError by both
+    candidate stages and the shared verify (not an assert, which
+    ``python -O`` strips)."""
+    df = spark.createDataFrame([(1, "abcdefgh")], "doc_id long, text string")
+    pairs = spark.createDataFrame([(1, 1)], "id_a long, id_b long")
+    with pytest.raises(ValueError, match="threshold"):
+        dedup.prefix_filter_candidates(df, threshold=threshold)
+    with pytest.raises(ValueError, match="threshold"):
+        dedup.containment_join_prefix(df, threshold=threshold)
+    with pytest.raises(ValueError, match="threshold"):
+        dedup.jaccard_verify_arrow(pairs, df, threshold=threshold)
 
 
 def test_duplicated_spans_matches_sql_twin(spark, sf_dir):
@@ -2401,33 +2408,6 @@ def test_levenshtein_self_join_matches_bruteforce(spark):
         assert expected, f"fixture must contain pairs within k={k}"
 
 
-def test_levenshtein_candidates_verified_param_exact(spark):
-    """``verified=True`` (DP pushed below the pair distinct) must yield
-    the same candidate SET as the default post-distinct shape, minus
-    only the >k rows the verify removes — i.e. filtering the default's
-    output equals the verified output (distinct commutes with the
-    deterministic per-row filter)."""
-    from nyc_taxi_bigdata_pipeline_spark.operators.editdist import (
-        levenshtein_candidates,
-    )
-
-    rows = [(i, f"token{i % 40:02d}x{i % 7}") for i in range(200)]
-    df = spark.createDataFrame(rows, "id long, s string")
-    import pyspark.sql.functions as F2
-    default_filtered = {
-        (r.pid_a, r.pid_b)
-        for r in levenshtein_candidates(df, "id", "s", k=1)
-        .filter(F2.levenshtein("ps_a", "ps_b") <= 1)
-        .collect()
-    }
-    verified = {
-        (r.pid_a, r.pid_b)
-        for r in levenshtein_candidates(df, "id", "s", k=1, verified=True)
-        .collect()
-    }
-    assert verified == default_filtered and verified
-
-
 def test_levenshtein_self_join_partition_invariant(spark):
     from nyc_taxi_bigdata_pipeline_spark.operators.editdist import (
         levenshtein_self_join,
@@ -2650,36 +2630,6 @@ def test_audio_spectrograms_dataframe_roundtrip(spark):
         assert r["dominant_band"] == int(np.argmax(ref[4:]))
     # expected dominant bands for 500/2500/6500 Hz at 1 kHz bands
     assert [got[k]["dominant_band"] for k in ["0", "1", "2"]] == [0, 2, 6]
-
-
-def test_levenshtein_two_piece_matches_bruteforce(spark):
-    """The m=k+2 / >=2-surviving-pieces blocking must equal brute force
-    on the same mixed fixture as the k+1 scheme (shorts and empties
-    route through the shared deletion-neighborhood path)."""
-    from nyc_taxi_bigdata_pipeline_spark.operators.editdist import (
-        levenshtein_self_join,
-    )
-
-    words = [
-        "spark", "sparks", "spork", "shark", "sharp", "spar", "scar",
-        "analytics", "analytic", "analytcs", "anaiytics",
-        "pipeline", "pipelines", "pipelin", "pupeline",
-        "a", "b", "ab", "ba", "", "x", "xy", "abc", "abd", "acb",
-        "levenshtein", "levenstein", "levenshtien",
-        "deduplicate", "deduplicates", "reduplicate",
-    ]
-    rows = [(i, w) for i, w in enumerate(words)]
-    df = spark.createDataFrame(rows, "id long, s string")
-    for k in (1, 2):
-        expected = _lev_bruteforce(spark, rows, k)
-        got = {
-            (r["id_a"], r["id_b"], r["dist"])
-            for r in levenshtein_self_join(
-                df, "id", "s", k=k, pieces="k+2"
-            ).collect()
-        }
-        assert got == expected
-        assert expected
 
 
 def test_grouped_quantile_null_group_keys_dropped(spark):

@@ -16,6 +16,7 @@ from nyc_taxi_bigdata_pipeline_spark.operators.editdist import (
     _strip_common_affixes,
     levenshtein_self_join,
 )
+from tests.test_operators import _lev_bruteforce
 
 
 # ------------------------------------------------- affix stripping
@@ -62,11 +63,13 @@ def test_self_join_strip_equals_unstripped(spark, k):
     # (the TPC-H name pathology) with planted near-dup pairs
     vals = [f"Record#{i:06d}-end" for i in range(0, 400, 2)]
     vals += [f"Record#{i + 1:06d}-end" for i in range(0, 100, 2)]  # dist 1 pairs
+    # the self-join always strips the corpus affixes; brute force over the
+    # UNSTRIPPED strings is the reference
+    expected = _lev_bruteforce(spark, list(enumerate(vals)), k)
     df = _strings(spark, vals).repartition(8)
-    on = levenshtein_self_join(df, "id", "s", k=k, strip_affixes=True)
-    off = levenshtein_self_join(df, "id", "s", k=k, strip_affixes=False)
-    assert sorted(map(tuple, on.collect())) == sorted(map(tuple, off.collect()))
-    assert on.count() > 0  # the planted pairs are actually found
+    got = {tuple(r) for r in levenshtein_self_join(df, "id", "s", k=k).collect()}
+    assert got == expected
+    assert expected  # the planted pairs are actually found
 
 
 def test_self_join_strip_identical_corpus(spark):
