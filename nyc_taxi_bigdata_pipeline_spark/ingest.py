@@ -12,10 +12,10 @@ overwrite) so Catalyst prunes partitions from filters automatically
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .functions.datetime_parity import month_window
-from .schema import TRIPS_RAW_COLUMNS
+from .schema import SILVER_SCHEMA, TRIPS_RAW_COLUMNS
 
 PICKUP = "tpep_pickup_datetime"
 DROPOFF = "tpep_dropoff_datetime"
@@ -83,8 +83,10 @@ def write_silver(df: DataFrame, path: str, year: int, month: int) -> None:
 
 def read_silver(spark: SparkSession, path: str, months: list[tuple[int, int]] | None = None) -> DataFrame:
     """S3: multi-month read via partition pruning instead of the
-    reference's explicit path lists (spark_io.py:71-135)."""
-    df = spark.read.parquet(path)
+    reference's explicit path lists (spark_io.py:71-135). The schema is
+    declared (``SILVER_SCHEMA``), so the read runs no footer-inference
+    job."""
+    df = spark.read.schema(SILVER_SCHEMA).parquet(path)
     if months:
         cond = None
         for y, m in months:
@@ -101,18 +103,17 @@ def ingest_month(
     year: int,
     month: int,
 ) -> dict[str, int]:
-    """One month of ex02: clean + write + retention counts.
+    """One month of ex02: clean + write, one Spark action.
 
     Returns {'rows_in', 'rows_out'} for the quality layer's retention
-    gate (full_pipeline_dag.py:130-181). The cleaned frame is persisted
-    before the count+write fan-out, mirroring the reference's
-    persist-before-dual-write (Ex02DataIngestion.scala:111).
+    gate (full_pipeline_dag.py:130-181). Both counts come from
+    ``Observation``s on the silver write itself — one on the raw frame
+    before ``clean_month``, one after it — so nothing is persisted and no
+    separate count job runs (the ``quality.quarantine_split`` pattern).
     """
-    rows_in = raw_df.count()
-    cleaned = clean_month(raw_df, year, month).persist()
-    try:
-        rows_out = cleaned.count()
-        write_silver(cleaned, silver_path, year, month)
-    finally:
-        cleaned.unpersist()
-    return {"rows_in": rows_in, "rows_out": rows_out}
+    seen_in, seen_out = Observation(), Observation()
+    cleaned = clean_month(
+        raw_df.observe(seen_in, F.count(F.lit(1)).alias("rows")), year, month
+    ).observe(seen_out, F.count(F.lit(1)).alias("rows"))
+    write_silver(cleaned, silver_path, year, month)
+    return {"rows_in": int(seen_in.get["rows"]), "rows_out": int(seen_out.get["rows"])}

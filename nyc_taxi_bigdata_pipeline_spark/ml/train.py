@@ -1,8 +1,11 @@
 """GBT fare-prediction pipeline (ex05 parity, ``trainer.py:78-152``).
 
-M1-M8: 6× StringIndexer → 6× OneHotEncoder → VectorAssembler →
-GBTRegressor(maxDepth=6, maxIter=50, seed=42), evaluated with
-RMSE/MAE/R². The encoder stack sits behind ``build_pipeline`` so a
+M1-M8: one multi-column StringIndexer → one multi-column OneHotEncoder
+over the 6 categoricals → VectorAssembler → GBTRegressor(maxDepth=6,
+maxIter=50, seed=42), evaluated with RMSE/MAE/R². The reference's
+6× StringIndexer → 6× OneHotEncoder fits the same model; the
+multi-column indexer counts all six columns' labels in one pass instead
+of six. The encoder stack sits behind ``build_pipeline`` so a
 hash/target encoder can replace OHE at 100-TB cardinalities
 (SURVEY §7.4).
 """
@@ -12,6 +15,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
+import pyspark.sql.functions as F
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.feature import OneHotEncoder, StringIndexer, VectorAssembler
@@ -32,13 +36,15 @@ def build_pipeline(
     max_depth: int = GBT_MAX_DEPTH,
     max_iter: int = GBT_MAX_ITER,
 ) -> Pipeline:
-    indexers = [
-        StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep")
-        for c in categorical
-    ]
-    encoders = [
-        OneHotEncoder(inputCol=f"{c}_idx", outputCol=f"{c}_ohe") for c in categorical
-    ]
+    indexer = StringIndexer(
+        inputCols=list(categorical),
+        outputCols=[f"{c}_idx" for c in categorical],
+        handleInvalid="keep",
+    )
+    encoder = OneHotEncoder(
+        inputCols=[f"{c}_idx" for c in categorical],
+        outputCols=[f"{c}_ohe" for c in categorical],
+    )
     assembler = VectorAssembler(
         inputCols=[f"{c}_ohe" for c in categorical] + list(numeric),
         outputCol="features",
@@ -51,7 +57,7 @@ def build_pipeline(
         maxIter=max_iter,
         seed=SEED,
     )
-    return Pipeline(stages=[*indexers, *encoders, assembler, gbt])
+    return Pipeline(stages=[indexer, encoder, assembler, gbt])
 
 
 @dataclass
@@ -83,13 +89,19 @@ def train_and_evaluate(
     test_df: DataFrame,
     pipeline: Pipeline | None = None,
 ) -> TrainResult:
-    """M5+M9: cache both splits, fit, evaluate (trainer.py:109,186-212)."""
+    """M5+M9: cache both splits, fit, evaluate (trainer.py:109,186-212).
+    One counting action over the union of the two splits materializes
+    both caches and counts both."""
     pipeline = pipeline or build_pipeline()
     train_df = train_df.cache()
     test_df = test_df.cache()
     try:
-        train_rows = train_df.count()
-        test_rows = test_df.count()
+        train_rows, test_rows = (
+            train_df.select(F.lit(True).alias("train"))
+            .unionAll(test_df.select(F.lit(False).alias("train")))
+            .agg(F.count_if("train"), F.count_if(~F.col("train")))
+            .first()
+        )
         t0 = time.perf_counter()
         model = pipeline.fit(train_df)
         train_seconds = time.perf_counter() - t0

@@ -9,14 +9,13 @@ invokes this, the data logic lives here.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from pathlib import Path
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from . import ingest, quality, warehouse
 from .functions.datetime_parity import sliding_months
-from .sources.fs import hadoop_path_exists
+from .schema import FACT_TRIP_SCHEMA
+from .sources.fs import child_path, hadoop_path_exists
 from .ml.features import build_feature_table
 from .ml.registry import ModelRegistry
 from .ml.train import TrainResult, train_and_evaluate
@@ -60,16 +59,17 @@ def run_month(
     clean = ingest.read_silver(spark, silver_path, [(year, month)])
     fact_incoming = warehouse.build_fact(clean)
 
-    fact_path = str(Path(gold_path) / "fact_trip")
-    # S4 Hadoop FS probe (not os.path): works on HDFS/S3A, not just the
-    # driver's local disk
+    fact_path = child_path(gold_path, "fact_trip")
+    # S4 Hadoop FS probe (not os.path): works on HDFS/S3A, not just a
+    # local disk. Gold reads declare their schema: no footer-inference
+    # job per read.
     existing = None
     if hadoop_path_exists(spark, fact_path):
-        existing = spark.read.parquet(fact_path)
+        existing = spark.read.schema(FACT_TRIP_SCHEMA).parquet(fact_path)
     new_rows = warehouse.load_fact_idempotent(fact_incoming, existing)
     new_rows.write.mode("append").parquet(fact_path)
 
-    fact = spark.read.parquet(fact_path)
+    fact = spark.read.schema(FACT_TRIP_SCHEMA).parquet(fact_path)
     res.counts["fact_rows"] = fact.count()
     res.checks.append(quality.min_rowcount_check(res.counts["fact_rows"], "fact", min_rows))
 
@@ -79,18 +79,23 @@ def run_month(
     # the rebuild or prior facts vanish from inner-join analytics.
     # Mirrors dw_load_incremental.sql's insert-if-absent and stays
     # O(month + dim), never a scan of the full fact history.
-    dims = warehouse.seed_enum_dims(spark)
-    dims["dim_location"] = _merge_existing_dim(
-        spark, warehouse.build_dim_location(zone_lookup, clean),
-        str(Path(gold_path) / "dim_location"), "location_id",
-    )
-    dims["dim_date"] = _merge_existing_dim(
-        spark, warehouse.build_dim_date(clean),
-        str(Path(gold_path) / "dim_date"), "date_id",
-    )
-    dims["dim_time"] = warehouse.build_dim_time(spark)
-    for name, df in dims.items():
-        df.write.mode("overwrite").parquet(str(Path(gold_path) / name))
+    for name, new_dim, key in (
+        ("dim_location", warehouse.build_dim_location(zone_lookup, clean), "location_id"),
+        ("dim_date", warehouse.build_dim_date(clean), "date_id"),
+    ):
+        path = child_path(gold_path, name)
+        _merge_existing_dim(spark, new_dim, path, key).write.mode("overwrite").parquet(path)
+
+    # The constant dims (enum VALUES lists, the generated 1440-minute day)
+    # are seeded once, when their gold table is absent — the reference
+    # loads them once at DW creation (dw_load_reference.sql), not every
+    # month. So a change to the enum constants in schema.py reaches only
+    # a new gold; an existing gold keeps the rows it was seeded with.
+    constant = {**warehouse.seed_enum_dims(spark), "dim_time": warehouse.build_dim_time(spark)}
+    for name, df in constant.items():
+        path = child_path(gold_path, name)
+        if not hadoop_path_exists(spark, path):
+            df.write.parquet(path)
     return res
 
 
@@ -100,10 +105,11 @@ def _merge_existing_dim(
     """Insert-if-absent dim merge: carry forward existing dim rows whose
     key the new build didn't observe. The carried rows are collected
     (dims are bounded by design — zone count / calendar days), which
-    also breaks the read-from-path → overwrite-same-path cycle."""
+    also breaks the read-from-path → overwrite-same-path cycle. The old
+    dim is read with the new dim's schema (no footer inference)."""
     if not hadoop_path_exists(spark, path):
         return new_dim
-    old = spark.read.parquet(path)
+    old = spark.read.schema(new_dim.schema).parquet(path)
     carried = old.join(new_dim.select(key), [key], "left_anti").collect()
     if not carried:
         return new_dim

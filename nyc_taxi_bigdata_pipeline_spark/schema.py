@@ -68,6 +68,11 @@ def _f(name: str, t: str) -> StructField:
 
 TRIPS_RAW_SCHEMA = StructType([_f(n, t) for n, t in TRIPS_RAW_COLUMNS.items()])
 
+# Silver layer: the cleaned 19 columns plus the Hive partition keys that
+# ``ingest.write_silver`` adds — the declared read-back schema, so a
+# silver read needs no parquet footer inference.
+SILVER_SCHEMA = StructType([*TRIPS_RAW_SCHEMA.fields, _f("year", "int"), _f("month", "int")])
+
 ZONE_LOOKUP_SCHEMA = StructType(
     [
         _f("LocationID", "int"),

@@ -29,6 +29,13 @@ def split_existing(
     return existing, missing
 
 
+def child_path(root: str, name: str) -> str:
+    """``root/name`` as a string join. ``pathlib.Path`` collapses the
+    ``//`` of a Hadoop URI (``s3a://bucket/gold`` → ``s3a:/bucket/gold``)
+    and so loses the bucket or authority."""
+    return f"{root.rstrip('/')}/{name}"
+
+
 def month_partition_path(root: str, year: int, month: int) -> str:
     """Hive-style partition path for the silver layer."""
     return f"{root}/year={year}/month={month}"

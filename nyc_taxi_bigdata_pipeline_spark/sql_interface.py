@@ -9,9 +9,9 @@ become partition pruning + broadcast joins (SURVEY §4).
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
+
+from .sources.fs import child_path, hadoop_path_exists
 
 STAR_TABLES = (
     "fact_trip",
@@ -26,12 +26,13 @@ STAR_TABLES = (
 
 def register_star(spark: SparkSession, gold_path: str) -> list[str]:
     """Register every gold table found under ``gold_path`` as a temp
-    view. Returns the registered names."""
+    view. Returns the registered names. Probes through the Hadoop FS API,
+    so a ``file://``, HDFS or S3A gold registers like a local one."""
     found = []
     for name in STAR_TABLES:
-        p = Path(gold_path) / name
-        if p.exists():
-            spark.read.parquet(str(p)).createOrReplaceTempView(name)
+        p = child_path(gold_path, name)
+        if hadoop_path_exists(spark, p):
+            spark.read.parquet(p).createOrReplaceTempView(name)
             found.append(name)
     return found
 

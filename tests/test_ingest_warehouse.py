@@ -61,6 +61,30 @@ def test_silver_roundtrip_and_partition_overwrite(spark, raw_month, tmp_path):
     assert pruned.count() < both.count()
 
 
+@pytest.mark.parametrize("case", ["normal", "all_dirty", "empty"])
+def test_ingest_month_observed_counts(spark, raw_month, tmp_path, case):
+    """The counts ingest_month observes on its one silver write equal the
+    raw count and the cleaned count computed directly — also for the
+    all-dirty month (rows_out 0) and an empty raw frame (rows_in 0)."""
+    raw = {
+        "normal": raw_month,
+        "all_dirty": raw_month.withColumn(
+            "tpep_pickup_datetime", F.lit(None).cast("timestamp")
+        ),
+        "empty": raw_month.limit(0),
+    }[case]
+    counts = ingest.ingest_month(spark, raw, str(tmp_path / "silver"), 2023, 1)
+    assert counts == {
+        "rows_in": raw.count(),
+        "rows_out": ingest.clean_month(raw, 2023, 1).count(),
+    }
+    assert all(type(v) is int for v in counts.values())
+    if case == "all_dirty":
+        assert counts["rows_in"] > 0 and counts["rows_out"] == 0
+    if case == "empty":
+        assert counts == {"rows_in": 0, "rows_out": 0}
+
+
 def test_silver_overwrite_dynamic_without_session_conf(spark, raw_month, tmp_path):
     """The driver hands entry() a session we didn't build; if that session
     has static partitionOverwriteMode, re-running one month must still not

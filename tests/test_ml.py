@@ -49,6 +49,35 @@ def test_train_and_evaluate(trained):
     assert trained.train_rows > 0 and trained.test_rows > 0
 
 
+def test_split_row_counts(trained, feature_frames):
+    tr, te = feature_frames
+    assert (trained.train_rows, trained.test_rows) == (tr.count(), te.count())
+
+
+def test_multicolumn_encoding_matches_per_column_reference(trained, feature_frames):
+    """build_pipeline's one multi-column StringIndexer/OneHotEncoder fits
+    the same model as the reference's 6× StringIndexer → 6× OneHotEncoder
+    stack: equal predictions on the same data."""
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import OneHotEncoder, StringIndexer
+
+    from nyc_taxi_bigdata_pipeline_spark.schema import ML_CATEGORICAL
+
+    tr, te = feature_frames
+    fitted = train.build_pipeline(max_iter=10)
+    per_column = Pipeline(stages=[
+        *(StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep")
+          for c in ML_CATEGORICAL),
+        *(OneHotEncoder(inputCol=f"{c}_idx", outputCol=f"{c}_ohe") for c in ML_CATEGORICAL),
+        *fitted.getStages()[-2:],  # the same VectorAssembler and GBTRegressor
+    ]).fit(tr)
+    cols = [*te.columns, "prediction"]
+    ours = trained.model.transform(te).select(cols)
+    ref = per_column.transform(te).select(cols)
+    assert ours.count() == te.count()
+    assert ours.exceptAll(ref).count() == 0 and ref.exceptAll(ours).count() == 0
+
+
 def test_predictions_plausible(trained, feature_frames):
     _, te = feature_frames
     preds = trained.model.transform(te)
